@@ -199,7 +199,9 @@ def incremental_edges(
     ids — the contracted-graph formulation: every committed endpoint is
     replaced by its committed canonical (all members of a committed
     cluster are already connected, so one edge to the canonical is
-    equivalent to edges to any member). Returns (edges, dropped, stats).
+    equivalent to edges to any member). Returns (edges, dropped); the
+    edge union may repeat a pair, which ``connected_components``
+    deduplicates.
 
     Committed signatures/digests come from the state store; minhash is
     computed ONLY over the new batch. ``committed_docs`` is consulted
@@ -307,7 +309,6 @@ def incremental_edges(
         nn_exact.unionByName(nc_exact)
         .unionByName(nn_near)
         .unionByName(nc_near)
-        .distinct()
     )
     return edges, dropped
 
@@ -431,7 +432,7 @@ def main() -> int:
                 jaccard_threshold=args.jaccard_threshold,
                 max_bucket_size=args.max_bucket_size or None,
             )
-            pairs = pairs.unionByName(near).distinct()
+            pairs = pairs.unionByName(near)
 
         mapping = canonicalize(docs, pairs)
         mapping.write.mode("overwrite").parquet(args.output)

@@ -511,26 +511,20 @@ def minhash_signatures(docs: DataFrame, portable: bool = True) -> DataFrame:
     that the Arrow boundary costs more than interpretation; the
     window-occurrence fold at 2×width×n_windows per doc is ~6× heavier
     and keeps the Python win there)."""
-    toks = F.array_distinct(F.split(F.lower("text"), " "))
-    base_hash = md5_int if portable else (
-        lambda c: F.pmod(F.xxhash64(c), F.lit(P_HASH))
+    base_hash = (  # md5_int / the xxhash64 family, as SQL text
+        f"pmod(CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT), {P_HASH})"
+        if portable else f"pmod(xxhash64(t), {P_HASH})"
     )
-
-    def perm(i: int):
-        # single-param lambda: a 2-arg callable would make F.transform
-        # pass the ARRAY INDEX as the second argument, clobbering i
-        a = ((i * 2 + 1) * _MUL) % P_HASH
-        b = (i * _ADD1 + _ADD2) % P_HASH
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P_HASH)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("hs"), perm(i)))
-            for i in range(N_MINHASH)
-        ]
+    # both expressions are parsed once, JVM-side: a Column built from
+    # 17 ``F.transform`` lambdas costs hundreds of py4j calls per build
+    hs = f"transform(array_distinct(split(lower(text), ' ')), t -> {base_hash})"
+    sig = ", ".join(
+        f"array_min(transform(hs, h -> ({((i * 2 + 1) * _MUL) % P_HASH} * h"
+        f" + {(i * _ADD1 + _ADD2) % P_HASH}) % {P_HASH}))"
+        for i in range(N_MINHASH)
     )
-    return docs.withColumn("hs", F.transform(toks, base_hash)).select(
-        "doc_id", sig.alias("sig")
+    return docs.withColumn("hs", F.expr(hs)).select(
+        "doc_id", F.expr(f"array({sig})").alias("sig")
     )
 
 _ROWS_PER_BAND = N_MINHASH // LSH_BANDS

@@ -10,14 +10,19 @@ smallest label among itself and its neighbors) combined with pointer
 jumping (each vertex then adopts its LABEL's label — path compression),
 the two-phase formulation of MapReduce connected components (Kiveris et
 al., "Connected Components in MapReduce and Beyond", public). Neighbor-
-min alone moves labels one hop per round (O(diameter) rounds — a long
-chain stalls); with the jumping step label distances halve per round,
-giving O(log n) convergence on any graph.
+min alone moves labels one hop per round; the jump shortcuts label
+chains. A 64-hop path converges in 6 rounds when its ids ascend, but
+in 22 when they are shuffled: rounds still grow with the diameter.
 
-No driver-side graph materialization: edges and labels stay DataFrames;
-the only driver values are per-iteration convergence counts.
-``localCheckpoint`` truncates the growing lineage each iteration (the
-plan would otherwise deepen linearly and re-execute from the scan).
+Round 1 is fused into label set-up: labels start as the vertex itself,
+so its neighbor-min is one aggregate, ``least(u, min(v))`` per ``u``.
+Each round then stops on an edge-consistency check — one emptiness
+probe for an edge whose endpoints carry different labels, the only
+driver value per round. The check is exact: labels only decrease, stay
+inside their component and satisfy ``label(x) ≤ x``, so once every edge
+agrees a component carries one label, which is ≤ its minimum vertex
+(that vertex's own label) and is itself a member (≥ the minimum).
+``localCheckpoint`` truncates the growing lineage each round.
 """
 
 from __future__ import annotations
@@ -33,56 +38,44 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """pairs(src, dst) → (doc_id, component) with component = min doc_id
-    reachable. Raises if not converged within ``max_iter`` — with
-    pointer jumping that bound covers graphs astronomically larger than
-    any real corpus (2^25 ≫ 10¹² path length)."""
+    reachable. Raises if the labels are not consistent after ``max_iter``
+    rounds."""
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-    )
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("u").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
+    stepped = edges.groupBy("u").agg(
+        F.least("u", F.min("v")).alias("component")
+    ).withColumnRenamed("u", "doc_id")
     for _ in range(max_iter):
-        # phase 1 — neighbor min: component = min over {self} ∪ neighbors
-        nbr_min = (
-            edges.join(labels, edges.v == labels.doc_id)
-            .groupBy("u")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        stepped = labels.join(nbr_min, labels.doc_id == nbr_min.u, "left").select(
-            "doc_id",
-            F.least(
-                F.col("component"), F.coalesce("nbr_component", "component")
-            ).alias("component"),
-        )
-        # phase 2 — pointer jumping: component = component's component
-        # (halves every label's distance to its cluster minimum)
+        # pointer jumping: component = component's component
         parent = stepped.select(
             F.col("doc_id").alias("p_id"), F.col("component").alias("p_comp")
         )
-        new_labels = (
+        labels = (
             stepped.join(parent, stepped.component == parent.p_id, "left")
-            .select(
-                "doc_id",
-                F.coalesce("p_comp", "component").alias("component"),
-            )
+            .select("doc_id", F.coalesce("p_comp", "component").alias("component"))
             .localCheckpoint(eager=True)
         )
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if n_changed == 0:
+        la = labels.select(F.col("doc_id").alias("u"), F.col("component").alias("cu"))
+        lb = labels.select(F.col("doc_id").alias("v"), F.col("component").alias("cv"))
+        if (
+            edges.filter(F.col("u") < F.col("v"))  # one orientation suffices
+            .join(la, "u")
+            .join(lb, "v")
+            .filter(F.col("cu") != F.col("cv"))
+            .isEmpty()
+        ):
             return labels
+        # neighbor min: component = min over {self} ∪ neighbors' labels
+        nbr_min = edges.join(lb, "v").groupBy(F.col("u").alias("doc_id")).agg(
+            F.min("cv").alias("nbr_component")
+        )
+        stepped = labels.join(nbr_min, "doc_id").select(
+            "doc_id", F.least("component", "nbr_component").alias("component")
+        )
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations"
     )

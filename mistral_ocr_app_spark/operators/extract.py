@@ -86,44 +86,15 @@ def _extract_one(text: str | None, tool: str | None, turn_idx: int) -> tuple:
     return (kind, "[invalid image]", 0, 0, 0, 0, False)
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        rows = [
-            _extract_one(text, tool, turn_idx)
-            for text, tool, turn_idx in zip(
-                pdf["text"].to_numpy(), pdf["tool"].to_numpy(), pdf["turn_idx"].to_numpy()
-            )
-        ]
-        kinds, texts_out, n_refs, n_images, n_rewritten, n_spans, valid = zip(*rows)
-        idx = pdf.index
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"].astype("int32"),
-                "role": pdf["role"],
-                "ts": pdf["ts"],
-                "kind": pd.Series(kinds, index=idx),
-                "extracted_text": pd.Series(texts_out, index=idx),
-                "n_refs": pd.Series(n_refs, index=idx, dtype="int32"),
-                "n_images": pd.Series(n_images, index=idx, dtype="int32"),
-                "n_rewritten": pd.Series(n_rewritten, index=idx, dtype="int32"),
-                "n_spans": pd.Series(n_spans, index=idx, dtype="int32"),
-                "valid": pd.Series(valid, index=idx, dtype="bool"),
-            }
-        )
-
-
 def _extract_arrow_batches(batches) -> "Iterator":
-    """Arrow-native variant of ``_extract_batches`` (round 7, guide §4.2):
-    the pass-through columns (conv_id, role, ts) are re-emitted as the
+    """Arrow-native extractor worker (round 7, guide §4.2): the
+    pass-through columns (conv_id, role, ts) are re-emitted as the
     INPUT batch's own Arrow buffers — zero-copy, never materialized as
     Python/pandas objects — and only text/tool/turn_idx (what
     ``_extract_one`` actually reads) cross into Python-object land.
     Measured on the 1M-turn bench corpus: the worker computes ~23
-    core-seconds but the mapInPandas stage burned ~54 — over half the
-    stage was Arrow↔pandas conversion, most of it for columns the
+    core-seconds but the former mapInPandas stage burned ~54 — over half
+    the stage was Arrow↔pandas conversion, most of it for columns the
     extractor never touches."""
     import pyarrow as pa
 

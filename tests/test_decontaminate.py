@@ -91,9 +91,6 @@ def test_probe_is_broadcast_no_corpus_shuffle(spark):
 
 
 def test_quality_pass_folds_decontam_flag(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
     from filter_job import quality_flags
 
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")

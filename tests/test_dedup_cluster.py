@@ -4,16 +4,14 @@ dedup job end-to-end on the driver testdata."""
 
 import json
 import random
-import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from mistral_ocr_app_spark.operators.dedup_cluster import (
     canonicalize,
     connected_components,
 )
-
-sys.path.insert(0, "/root/repo/jobs")
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,6 +38,14 @@ def _union_find_components(pairs):
     return {x: comp_min[find(x)] for x in parent}
 
 
+def _components(spark, pairs, **kwargs):
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    return {
+        r["doc_id"]: r["component"]
+        for r in connected_components(df, **kwargs).collect()
+    }
+
+
 def test_components_match_union_find_on_random_graphs(spark):
     rng = random.Random(7)
     for trial in range(3):
@@ -51,33 +57,51 @@ def test_components_match_union_find_on_random_graphs(spark):
             }
         )
         expected = _union_find_components(pairs)
-        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-        got = {
-            r["doc_id"]: r["component"]
-            for r in connected_components(df).collect()
-        }
-        assert got == expected, f"trial {trial}: component mismatch"
+        assert _components(spark, pairs) == expected, (
+            f"trial {trial}: component mismatch"
+        )
+
+
+def test_components_match_union_find_on_edge_cases(spark):
+    """Inputs the symmetric edge set and the fused first round must
+    absorb: no pairs, self-loops, pairs given in both orientations and
+    repeated, and stars centred on their minimum — which converge in the
+    first round, so ``max_iter=1`` must not raise on them."""
+    stars = [(5, i) for i in range(6, 40)] + [(i, 100) for i in range(101, 120)]
+    cases = {
+        "empty": [],
+        "self_loops": [(1, 1), (2, 2), (2, 3), (7, 7)],
+        "both_orientations_repeated": [
+            (1, 2), (2, 1), (1, 2), (3, 2), (9, 8), (8, 9), (8, 9),
+        ],
+        "stars": stars,
+    }
+    for name, pairs in cases.items():
+        assert _components(spark, pairs) == _union_find_components(pairs), name
+    assert _components(spark, stars, max_iter=1) == _union_find_components(stars)
 
 
 def test_components_long_chain_converges(spark):
     """A 64-hop path graph — the adversarial case for plain neighbor-min
     propagation (O(diameter) rounds) — must converge fast via the
-    pointer-jumping phase (label distances halve per round)."""
+    pointer-jumping phase, and still raise when even that is cut short."""
     pairs = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = connected_components(df).collect()
     assert all(r["component"] == 0 for r in got)
     assert len(got) == 65
+    with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
+        connected_components(df, max_iter=1)
 
 
 def test_canonicalize_covers_unpaired_docs(spark):
     docs = spark.range(10).select(F.col("id").alias("doc_id"))
-    pairs = spark.createDataFrame([(1, 4), (4, 7)], "doc_a long, doc_b long")
-    m = {r["doc_id"]: (r["canonical_id"], r["is_canonical"])
-         for r in canonicalize(docs, pairs).collect()}
-    assert m[1] == (1, True) and m[4] == (1, False) and m[7] == (1, False)
-    for d in (0, 2, 3, 5, 6, 8, 9):
-        assert m[d] == (d, True)
+    # merged doc → its canonical; with no pairs every doc is its own
+    for pairs, merged in (([(1, 4), (4, 7)], {4: 1, 7: 1}), ([], {})):
+        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        m = {r["doc_id"]: (r["canonical_id"], r["is_canonical"])
+             for r in canonicalize(docs, df).collect()}
+        assert m == {d: (merged.get(d, d), d not in merged) for d in range(10)}
 
 
 def test_dedup_job_end_to_end(spark, tmp_path):
@@ -110,6 +134,60 @@ def _adversarial_docs(spark, n_clones=200, n_unique=20):
     rows += [(10_000 + i, f"unique document {i} with tokens {i * 7} {i * 13} {i * 29}")
              for i in range(n_unique)]
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _minhash_column_reference(docs, portable):
+    """``minhash_signatures`` built as Columns — 17 ``F.transform`` calls
+    with Python lambdas: the reference its SQL-text build must
+    reproduce bit for bit."""
+    from mistral_ocr_app_spark.operators.corpus import (
+        _ADD1,
+        _ADD2,
+        _MUL,
+        N_MINHASH,
+        P_HASH,
+        md5_int,
+    )
+
+    toks = F.array_distinct(F.split(F.lower("text"), " "))
+    base_hash = md5_int if portable else (
+        lambda c: F.pmod(F.xxhash64(c), F.lit(P_HASH))
+    )
+
+    def perm(i: int):
+        a = ((i * 2 + 1) * _MUL) % P_HASH
+        b = (i * _ADD1 + _ADD2) % P_HASH
+        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P_HASH)
+
+    sig = F.array(
+        *[F.array_min(F.transform(F.col("hs"), perm(i))) for i in range(N_MINHASH)]
+    )
+    return docs.withColumn("hs", F.transform(toks, base_hash)).select(
+        "doc_id", sig.alias("sig")
+    )
+
+
+def test_minhash_signatures_equal_column_reference(spark):
+    """Both hash families, on the testdata documents plus null, empty,
+    case-folded, repeated-space and non-ASCII texts."""
+    from mistral_ocr_app_spark.operators.corpus import minhash_signatures
+
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "a A a"), (-4, "  two  spaces "),
+         (-5, "Ünïcödé текст 文字")],
+        "doc_id long, text string",
+    )
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("doc_id", "text")
+        .unionByName(edge)
+    )
+    for portable in (True, False):
+        got = minhash_signatures(docs, portable=portable)
+        ref = _minhash_column_reference(docs, portable)
+        assert got.exceptAll(ref).count() == 0, portable
+        assert ref.exceptAll(got).count() == 0, portable
+        assert got.count() == docs.count()
 
 
 def test_lsh_mega_bucket_guard_bounds_candidates(spark):

@@ -4,21 +4,18 @@ incremental plan must not re-scan/recompute committed signatures."""
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
-
-from dedup_job import (  # noqa: E402
+from conftest import JOBS_DIR
+from dedup_job import (
     exact_pairs,
     incremental_dedup,
     incremental_edges,
     near_dup_pairs,
     write_dedup_state,
 )
-from mistral_ocr_app_spark.operators.dedup_cluster import canonicalize  # noqa: E402
+from mistral_ocr_app_spark.operators.dedup_cluster import canonicalize
 
 
 def _corpus_rows():
@@ -229,7 +226,7 @@ def test_incremental_job_cli_end_to_end(spark, tmp_path):
 
     def run(*args):
         proc = subprocess.run(
-            [_sys.executable, "/root/repo/jobs/dedup_job.py", *args],
+            [_sys.executable, str(JOBS_DIR / "dedup_job.py"), *args],
             capture_output=True, text=True,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]

@@ -3,15 +3,12 @@
 options), driver-side streaming — never collect()."""
 
 import json
-import sys
 import zipfile
 
-sys.path.insert(0, "/root/repo/jobs")
+from export_job import export, plan_export
 
-from export_job import export, plan_export  # noqa: E402
-
-from mistral_ocr_app_spark.fixtures import write_fixture  # noqa: E402
-from mistral_ocr_app_spark.functions.png import decode_png, encode_png  # noqa: E402
+from mistral_ocr_app_spark.fixtures import write_fixture
+from mistral_ocr_app_spark.functions.png import decode_png, encode_png
 
 
 def _fixture(spark, tmp_path, n=5):

@@ -6,9 +6,8 @@ import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
-
-from filter_job import quality_flags  # noqa: E402
+from conftest import JOBS_DIR
+from filter_job import quality_flags
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -102,7 +101,7 @@ def test_cli_all_stages_together(tmp_path):
     )
     proc = subprocess.run(
         [
-            sys.executable, "/root/repo/jobs/filter_job.py",
+            sys.executable, str(JOBS_DIR / "filter_job.py"),
             "--input", f"{SF_DIR}/documents.parquet",
             "--output", out_dir,
             "--min-tokens", "10",

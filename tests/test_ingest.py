@@ -3,13 +3,10 @@ parquet, with the reference's URL guards (GDrive rewrite, size limit,
 extension allow-list — app.py:362-406,54-57)."""
 
 import json
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/jobs")
-
-from ingest_url_list import (  # noqa: E402
+from ingest_url_list import (
     allowed_url,
     ingest,
     rewrite_gdrive_url,

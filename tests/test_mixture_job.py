@@ -1,15 +1,12 @@
 """Mixture builder — weight semantics, determinism, shuffle order."""
 
 import hashlib
-import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+from mixture_job import build_mixture
 
-from mixture_job import build_mixture  # noqa: E402
-
-from mistral_ocr_app_spark.operators.corpus import P_HASH  # noqa: E402
+from mistral_ocr_app_spark.operators.corpus import P_HASH
 
 SF_DIR = "/root/testdata/sf0.001"
 DOCS = f"{SF_DIR}/documents.parquet"

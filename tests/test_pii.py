@@ -68,9 +68,6 @@ def test_idempotent(spark):
 
 
 def test_filter_job_stage(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
     from filter_job import apply_pii_redaction
 
     df = spark.createDataFrame(

@@ -147,9 +147,6 @@ def test_compaction_to_batch_layout(spark, fixture_paths, two_batch_dir, tmp_pat
     layout: fewer files, batch-keyed lineage, fingerprints cross-checked
     (xor of epoch fingerprints == compacted fingerprint), and the batch
     fingerprint audit passes on the result."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
     from compact_job import compact
 
     from mistral_ocr_app_spark.plans.lineage import verify_lineage
