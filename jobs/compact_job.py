@@ -37,10 +37,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def compact(spark: SparkSession, in_dir: str, out_dir: str) -> dict:
-    from mistral_ocr_app_spark.plans.lineage import lineage_rows
+    from mistral_ocr_app_spark.plans.lineage import lineage_rows, read_data, read_lineage
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    data = spark.read.parquet(os.path.join(in_dir, "data"))
+    data = read_data(spark, os.path.join(in_dir, "data"), keys=("bucket", "epoch"))
 
     # one shuffle to collapse epochs: repartition by bucket so each
     # bucket's rows land in few large files instead of one per epoch
@@ -50,14 +50,14 @@ def compact(spark: SparkSession, in_dir: str, out_dir: str) -> dict:
     )
 
     # recompute lineage from the compacted bytes (honest fingerprint)
-    done = spark.read.parquet(os.path.join(out_dir, "data"))
+    done = read_data(spark, os.path.join(out_dir, "data"))
     new_lineage = lineage_rows(done)
 
     # cross-check against the streamed lineage: bit_xor is associative,
     # so per bucket: xor(epoch fingerprints) == compacted fingerprint
     # and sum(epoch n_turns) == compacted n_turns
     streamed = (
-        spark.read.parquet(os.path.join(in_dir, "_lineage"))
+        read_lineage(spark, os.path.join(in_dir, "_lineage"), keys=("bucket", "epoch"))
         .groupBy("bucket")
         .agg(
             F.expr("bit_xor(fingerprint)").alias("exp_fingerprint"),

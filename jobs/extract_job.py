@@ -72,33 +72,43 @@ def main() -> int:
         assemble_conversations_chunked,
     )
     from mistral_ocr_app_spark.plans.lineage import (
-        committed_lineage,
-        pending_transcripts,
+        bucket_expr,
+        committed_buckets,
+        read_data,
         run_extraction_with_lineage,
         verify_lineage,
     )
-    from mistral_ocr_app_spark.sources.io import write_markdown_sink
+    from mistral_ocr_app_spark.sources.io import read_transcripts, write_markdown_sink
 
     if args.audit:
-        bad = verify_lineage(spark, args.output)
-        n_bad = bad.count()
+        # one audit pass; the mismatch set has at most one row per bucket
+        bad = [
+            r["bucket"]
+            for r in verify_lineage(spark, args.output).select("bucket").collect()
+        ]
         print(json.dumps({
             "audit": True,
-            "n_mismatched_buckets": n_bad,
-            "buckets": [r["bucket"] for r in bad.select("bucket").collect()][:100],
+            "n_mismatched_buckets": len(bad),
+            "buckets": bad[:100],
         }))
         spark.stop()
-        return 1 if n_bad else 0
+        return 1 if bad else 0
 
     if args.resume_only:
-        lin = committed_lineage(spark, f"{args.output}/_lineage")
-        pend = pending_transcripts(
-            spark, args.input, f"{args.output}/_lineage", args.buckets
-        )
+        committed = committed_buckets(spark, f"{args.output}/_lineage")
+        # input bucket ids (at most --buckets of them) minus the committed
+        # ones, on the driver: one lineage read, one input scan
+        input_buckets = {
+            r["bucket"]
+            for r in read_transcripts(spark, args.input)
+            .select(bucket_expr(args.buckets).alias("bucket"))
+            .distinct()
+            .collect()
+        }
         stats = {
             "resume_only": True,
-            "n_committed": lin.count() if lin is not None else 0,
-            "n_pending_buckets": pend.select("bucket").distinct().count(),
+            "n_committed": len(committed),
+            "n_pending_buckets": len(input_buckets - set(committed)),
         }
         print(json.dumps(stats))
         spark.stop()
@@ -108,7 +118,7 @@ def main() -> int:
         spark, args.input, args.output, n_buckets=args.buckets
     )
     if args.assemble:
-        extracted = spark.read.parquet(f"{args.output}/data")
+        extracted = read_data(spark, f"{args.output}/data")
         # extracted is parquet-backed here, so assemble_auto's three
         # traversals re-scan a columnar file, not the extraction UDF
         if args.chunk_size > 0:

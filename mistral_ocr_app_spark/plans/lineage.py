@@ -18,8 +18,11 @@ Design (SURVEY §4.3):
     fingerprint = bit_xor of row hashes — order-insensitive and
     overflow-free (ANSI mode), so identical output ⟺ identical
     fingerprint regardless of execution order.
-  * resume = anti-join of all buckets against committed lineage: a
-    fresh run computes the pending set and touches nothing committed.
+  * resume plans each leg from the lineage alone: one read collects
+    the committed bucket ids, and the input is scanned once, by the
+    extraction, through a broadcast LEFT ANTI against the committed
+    lineage (details in ``run_extraction_with_lineage``). Resume
+    assumes the input did not change between the kill and the resume.
 
 On a real cluster the lineage table is an Iceberg table and the commit
 is ``MERGE INTO``; locally both are parquet directories (append-only
@@ -30,11 +33,14 @@ contract.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.extract import extract_turns
+from ..operators.extract import EXTRACT_FIELDS, extract_turns
+from ..sources.io import read_transcripts
 
 DEFAULT_BUCKETS = 64
 
@@ -45,27 +51,61 @@ def bucket_expr(n_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
 
+def _key_fields(keys: tuple[str, ...]) -> list[T.StructField]:
+    return [T.StructField(k, T.IntegerType()) for k in keys]
+
+
+def read_data(
+    spark: SparkSession, data_dir: str, keys: tuple[str, ...] = ("bucket",)
+) -> DataFrame:
+    """The committed per-turn table: ``EXTRACT_FIELDS`` plus its int
+    partition keys (``bucket``; ``bucket, epoch`` for the streaming
+    sink). Schema-pinned, so the read runs no inference job."""
+    return spark.read.schema(T.StructType(EXTRACT_FIELDS + _key_fields(keys))).parquet(
+        data_dir
+    )
+
+
+def read_lineage(
+    spark: SparkSession, lineage_dir: str, keys: tuple[str, ...] = ("bucket",)
+) -> DataFrame:
+    """Lineage rows as ``lineage_rows`` writes them, schema-pinned: no
+    inference job, and an existing but empty directory reads as zero
+    rows instead of failing."""
+    return spark.read.schema(T.StructType(_key_fields(keys) + LINEAGE_FIELDS)).parquet(
+        lineage_dir
+    )
+
+
+def _done_buckets(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
+    """Committed bucket ids, one per commit; None only when the lineage
+    directory does not exist. Any other read error raises: treating an
+    unreadable lineage as "nothing committed" would re-extract every
+    bucket and append duplicate lineage rows."""
+    if not os.path.isdir(lineage_dir):
+        return None
+    return read_lineage(spark, lineage_dir).filter(F.col("status") == "done").select(
+        "bucket"
+    )
+
+
 def committed_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
     """Distinct committed bucket ids as a RELATION (None if no lineage
     yet). Resume filters anti-join against this — never an ``isin`` over
     a collected list, which at 4096+ mostly-committed buckets becomes a
     giant literal IN in the plan (SURVEY §4.3 prescribes the anti-join)."""
-    if not os.path.isdir(lineage_dir):
-        return None
-    try:
-        lin = spark.read.parquet(lineage_dir)
-    except Exception:
-        return None
-    return lin.filter(F.col("status") == "done").select("bucket").distinct()
+    done = _done_buckets(spark, lineage_dir)
+    return None if done is None else done.distinct()
 
 
 def committed_buckets(spark: SparkSession, lineage_dir: str) -> list[int]:
-    """Driver-side bucket-id list (bounded by n_buckets) — for run stats
-    and tests, NOT for plan filters."""
-    lin = committed_lineage(spark, lineage_dir)
-    if lin is None:
+    """Sorted committed bucket ids, for planning a leg and for stats —
+    NOT for plan filters. The lineage holds one row per bucket commit,
+    so the ids are deduplicated on the driver: one scan job, no shuffle."""
+    done = _done_buckets(spark, lineage_dir)
+    if done is None:
         return []
-    return sorted(r["bucket"] for r in lin.collect())
+    return sorted({r["bucket"] for r in done.collect()})
 
 
 def pending_transcripts(
@@ -78,13 +118,27 @@ def pending_transcripts(
     lineage relation (plan-asserted in tests/test_lineage.py) — never an
     ``isin`` over a collected list, whose plan grows with every
     committed bucket."""
-    transcripts = spark.read.parquet(transcripts_path).withColumn(
+    transcripts = read_transcripts(spark, transcripts_path).withColumn(
         "bucket", bucket_expr(n_buckets)
     )
     lin_done = committed_lineage(spark, lineage_dir)
     if lin_done is None:
         return transcripts
     return transcripts.join(F.broadcast(lin_done), "bucket", "left_anti")
+
+
+# the columns lineage_rows adds after its keys, as written to parquet
+LINEAGE_FIELDS = [
+    T.StructField("status", T.StringType()),
+    T.StructField("n_turns", T.LongType()),
+    T.StructField("n_convs", T.LongType()),
+    T.StructField("fingerprint", T.LongType()),
+    T.StructField("n_chars", T.LongType()),
+    T.StructField("n_images", T.LongType()),
+    T.StructField("n_rewritten", T.LongType()),
+    T.StructField("n_invalid", T.LongType()),
+    T.StructField("committed_at", T.TimestampType()),
+]
 
 
 def lineage_rows(
@@ -109,6 +163,16 @@ def lineage_rows(
     )
 
 
+def _listed_buckets(df: DataFrame) -> set[int]:
+    """Bucket ids with a file in ``df``'s file listing. ``inputFiles``
+    returns the listing the relation already holds: no Spark job."""
+    return {
+        int(m.group(1))
+        for f in df.inputFiles()
+        if (m := re.search(r"/bucket=(\d+)/[^/]*$", f))
+    }
+
+
 def run_extraction_with_lineage(
     spark: SparkSession,
     transcripts_path: str,
@@ -118,35 +182,42 @@ def run_extraction_with_lineage(
 ) -> dict:
     """Extract transcripts → per-turn output parquet, bucket-partitioned,
     with per-bucket lineage commits. Re-invocation after a kill resumes:
-    committed buckets are skipped (anti-join on lineage).
+    committed buckets are skipped.
 
-    ``fail_after_buckets``: test hook — commit only the first k pending
-    buckets then stop, simulating a mid-job kill *between* bucket commits
-    (a kill *inside* a bucket write just leaves an uncommitted bucket,
-    which dynamic overwrite makes safe to rerun).
+    Each leg is planned from the lineage alone: the work is every
+    bucket id not committed yet. When there is none the call returns
+    without touching the input; otherwise the extraction scans the
+    input once. The buckets committed now are the work ids with a
+    directory in the written data's file listing, so buckets without
+    input rows are neither written nor committed.
 
-    Returns {n_pending, n_committed_before, n_committed_now}.
+    ``fail_after_buckets``: test hook — work on only the first k
+    uncommitted bucket ids then stop, simulating a mid-job kill
+    *between* bucket commits (a kill *inside* a bucket write just leaves
+    an uncommitted bucket, which dynamic overwrite makes safe to rerun).
+    It commits fewer than k buckets when some of those ids have no rows.
+
+    Resume assumes the input did not change between kill and resume.
+
+    Returns {n_pending, n_committed_before, n_committed_now}; n_pending
+    is the number of buckets this call committed.
     """
     data_dir = os.path.join(out_dir, "data")
     lineage_dir = os.path.join(out_dir, "_lineage")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    lin_done = committed_lineage(spark, lineage_dir)
-    n_done = lin_done.count() if lin_done is not None else 0
-    pending = pending_transcripts(spark, transcripts_path, lineage_dir, n_buckets)
-
-    # bounded by n_buckets — driver-side stats + the fail_after test hook
-    pending_buckets = sorted(
-        r["bucket"] for r in pending.select("bucket").distinct().collect()
-    )
+    committed = committed_buckets(spark, lineage_dir)
+    todo = sorted(set(range(n_buckets)) - set(committed))
     if fail_after_buckets is not None:
-        # test hook simulating a kill after k bucket commits: an isin
-        # over k literals is fine here (k is small by construction)
-        pending_buckets = pending_buckets[:fail_after_buckets]
-        pending = pending.filter(F.col("bucket").isin(pending_buckets))
+        todo = todo[:fail_after_buckets]
 
-    n_now = 0
-    if pending_buckets:
+    written: list[int] = []
+    if todo:
+        pending = pending_transcripts(spark, transcripts_path, lineage_dir, n_buckets)
+        if fail_after_buckets is not None:
+            # test hook simulating a kill after k bucket commits: an isin
+            # over k literals is fine here (k is small by construction)
+            pending = pending.filter(F.col("bucket").isin(todo))
         extracted = extract_turns(pending.drop("bucket")).withColumn(
             "bucket", bucket_expr(n_buckets)
         )
@@ -158,19 +229,20 @@ def run_extraction_with_lineage(
         # dynamic partition pruning for a local build relation (measured:
         # empty PartitionFilters, full scan), so use a STATIC isin on the
         # partition column — it prunes directories, and its literal count
-        # equals THIS run's pending buckets (small on resume, which is
+        # equals the buckets THIS run wrote (small on resume, which is
         # when most buckets are committed and pruning matters); a fresh
         # full run writes every bucket and needs no filter at all.
-        done_df = spark.read.parquet(data_dir)
-        if len(pending_buckets) < n_buckets:
-            done_df = done_df.filter(F.col("bucket").isin(pending_buckets))
-        lineage_rows(done_df).write.mode("append").parquet(lineage_dir)
-        n_now = len(pending_buckets)
+        done_df = read_data(spark, data_dir)
+        written = sorted(set(todo) & _listed_buckets(done_df))
+        if written:
+            if len(written) < n_buckets:
+                done_df = done_df.filter(F.col("bucket").isin(written))
+            lineage_rows(done_df).write.mode("append").parquet(lineage_dir)
 
     return {
-        "n_pending": len(pending_buckets),
-        "n_committed_before": n_done,
-        "n_committed_now": n_now,
+        "n_pending": len(written),
+        "n_committed_before": len(committed),
+        "n_committed_now": len(written),
     }
 
 
@@ -187,9 +259,9 @@ def verify_lineage(
     The fingerprint is bit_xor of row hashes, so verification is
     order-insensitive and runs as one pass over the data."""
     keys = list(keys)
-    data = spark.read.parquet(os.path.join(out_dir, "data"))
+    data = read_data(spark, os.path.join(out_dir, "data"), keys)
     lineage = (
-        spark.read.parquet(os.path.join(out_dir, "_lineage"))
+        read_lineage(spark, os.path.join(out_dir, "_lineage"), keys)
         .filter(F.col("status") == "done")
         .select(*keys, "n_turns", "fingerprint")
     )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_turns
-from ..plans.lineage import DEFAULT_BUCKETS, bucket_expr, lineage_rows
+from ..plans.lineage import DEFAULT_BUCKETS, bucket_expr, lineage_rows, read_data
 from ..plans.lineage import verify_lineage as _verify
 from ..sources.io import TRANSCRIPT_SCHEMA
 
@@ -68,10 +68,9 @@ def run_streaming_extraction_with_lineage(
         )
         # lineage from the bytes on disk (honest fingerprint), epoch-
         # partitioned so replay replaces rather than duplicates
-        done = (
-            batch_df.sparkSession.read.parquet(data_dir)
-            .filter(F.col("epoch") == int(epoch_id))
-        )
+        done = read_data(
+            batch_df.sparkSession, data_dir, keys=("bucket", "epoch")
+        ).filter(F.col("epoch") == int(epoch_id))
         lineage_rows(done, keys=("bucket", "epoch")).write.partitionBy(
             "epoch"
         ).mode("overwrite").parquet(lineage_dir)
