@@ -96,11 +96,9 @@ def main() -> int:
     ap.add_argument("--output", required=True, help="compacted batch-layout dir")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("compact_streamed_output")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from mistral_ocr_app_spark.session import get_spark
+
+    spark = get_spark(app_name="compact_streamed_output")
     stats = compact(spark, args.input, args.output)
     print(json.dumps(stats))
     spark.stop()

@@ -36,7 +36,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -401,14 +400,10 @@ def main() -> int:
     if args.commit_state and args.commit_state == args.state:
         ap.error("--commit-state must differ from --state (dir rotation)")
 
-    spark = (
-        SparkSession.builder.appName("corpus_dedup")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-    )
-
     from mistral_ocr_app_spark.operators.dedup_cluster import canonicalize
+    from mistral_ocr_app_spark.session import get_spark
+
+    spark = get_spark(app_name="corpus_dedup")
 
     docs = spark.read.parquet(args.input)
     if args.state:

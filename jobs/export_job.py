@@ -257,9 +257,9 @@ def main() -> int:
                          "set, ZIP exports carry real image bytes")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from mistral_ocr_app_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("conversation_export").getOrCreate()
+    spark = get_spark(app_name="conversation_export")
     stats = export(spark, args.input, args.output, fmt=args.format,
                    limit=args.limit, media_path=args.media)
     print(json.dumps(stats))

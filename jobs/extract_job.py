@@ -14,6 +14,10 @@ Packaging (pure-Python engine, no native deps — SURVEY §4.3):
 On a cluster, --input can be an Iceberg table path; the job is resumable:
 re-submission after a failure skips buckets already committed to
 <output>/_lineage (see mistral_ocr_app_spark/plans/lineage.py).
+
+The session comes from ``get_spark`` (mistral_ocr_app_spark/session.py),
+like every job's: settings given to spark-submit (--master,
+--driver-memory, --conf) win, and the factory's defaults fill the rest.
 """
 
 from __future__ import annotations
@@ -26,8 +30,6 @@ import sys
 # local/dev runs (python jobs/extract_job.py) — on a cluster the engine
 # arrives via --py-files and this is a no-op
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import SparkSession  # noqa: E402
 
 
 def main() -> int:
@@ -56,16 +58,6 @@ def main() -> int:
                          "conversations; 0 = flat single-exchange assembly)")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("transcript_extraction")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-
     from mistral_ocr_app_spark.operators.assemble import (
         assemble_auto,
         assemble_conversations,
@@ -78,7 +70,10 @@ def main() -> int:
         run_extraction_with_lineage,
         verify_lineage,
     )
+    from mistral_ocr_app_spark.session import get_spark
     from mistral_ocr_app_spark.sources.io import read_transcripts, write_markdown_sink
+
+    spark = get_spark(app_name="transcript_extraction")
 
     if args.audit:
         # one audit pass; the mismatch set has at most one row per bucket

@@ -44,7 +44,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -161,11 +161,9 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("corpus_quality_filter")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from mistral_ocr_app_spark.session import get_spark
+
+    spark = get_spark(app_name="corpus_quality_filter")
     docs = spark.read.parquet(args.input)
     if args.strip_dup_windows:
         docs = apply_substring_dedup(docs, args.strip_dup_windows)

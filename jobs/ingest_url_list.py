@@ -267,9 +267,9 @@ def main() -> int:
                          "to <output>_errors.jsonl (n_rejected stays exact)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from mistral_ocr_app_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("transcript_ingestion").getOrCreate()
+    spark = get_spark(app_name="transcript_ingestion")
     stats = ingest(spark, args.manifest, args.output,
                    max_bytes=args.max_bytes, timeout=args.timeout,
                    workers=args.workers, flush_every=args.flush_every,

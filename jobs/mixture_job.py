@@ -106,11 +106,9 @@ def main() -> int:
         path, weight = rest.rsplit(":", 1)
         sources.append((name, path, float(weight)))
 
-    spark = (
-        SparkSession.builder.appName("mixture_builder")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    from mistral_ocr_app_spark.session import get_spark
+
+    spark = get_spark(app_name="mixture_builder")
     mix = build_mixture(spark, sources, args.seed, args.shards)
     mix.write.mode("overwrite").parquet(args.output)
 

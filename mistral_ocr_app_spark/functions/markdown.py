@@ -41,8 +41,6 @@ from typing import Any
 IMAGE_REF_RE = re.compile(
     r"!\[([^\]]*)\]\(([^)]+\.(jpeg|jpg|png|gif|webp))\)", re.IGNORECASE
 )
-# app.py:164 — strict refs the OCR API itself emits (img-N.jpeg/jpg)
-STRICT_REF_RE = re.compile(r"!\[.*?\]\(img-\d+\.jpe?g\)")
 STRICT_NAME_RE = re.compile(r"img-\d+\.jpe?g$", re.IGNORECASE)
 
 # werkzeug.utils.secure_filename semantics (documented public behavior,
@@ -100,26 +98,6 @@ def extract_images_from_markdown(markdown_text: str, page_index: int) -> list[di
             }
         )
     return out
-
-
-def api_images_for_markdown(markdown_text: str, page_index: int) -> list[dict]:
-    """Deterministic model of the "saved API images with paths" list.
-
-    The reference gets this list from the Mistral OCR response
-    (app.py:534-607): the API knows about exactly the ``img-N.jpeg``-style
-    images it emitted into the markdown. We model that: every ref whose
-    target matches the strict API naming (app.py:164) yields one saved
-    image whose on-disk name is the deterministic synthesis of
-    app.py:128/:585 (urandom salt removed per SURVEY §2.8 X13).
-    """
-    images = []
-    for m in IMAGE_REF_RE.finditer(markdown_text or ""):
-        image_ref, ext = m.group(2), m.group(3)
-        if STRICT_NAME_RE.search(image_ref):
-            img_id = normalize_image_id(image_ref)
-            filename = secure_filename(f"page_{page_index}_extracted_{img_id}.{ext}")
-            images.append({"id": img_id, "path": f"/tmp/uploads/{filename}"})
-    return images
 
 
 def rewrite_markdown_links(
@@ -350,15 +328,3 @@ def markdown_to_html(md: str) -> str:
         body = "<br/>".join(_md_inline(line) for line in block.splitlines())
         out.append(f"<p>{body}</p>")
     return "\n".join(out)
-
-
-# ------------------------------------------------------------ validation ---
-
-
-def validate_markdown_page(markdown_text: str, n_images: int) -> list[str]:
-    """Ref-count conformance (app.py:162-166): strict-ref count vs images."""
-    refs = STRICT_REF_RE.findall(markdown_text or "")
-    issues = []
-    if len(refs) != n_images:
-        issues.append(f"ref/image count mismatch: {len(refs)} refs vs {n_images} images")
-    return issues

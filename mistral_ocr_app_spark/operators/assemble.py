@@ -80,18 +80,6 @@ def assemble_conversations_app(extracted: DataFrame) -> DataFrame:
     )
 
 
-def assemble_conversations_cli(extracted: DataFrame) -> DataFrame:
-    """CLI/JS variant: plain ``\\n\\n`` join, no headers (main.py:42-50)."""
-    turns = _ordered_turns(extracted)
-    return extracted.groupBy("conv_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_turns"),
-        F.array_join(
-            F.transform(turns, lambda x: F.coalesce(x["extracted_text"], F.lit(""))),
-            PAGE_JOINER_CLI,
-        ).alias("combined_cli"),
-    )
-
-
 def _derive_combined(agged: DataFrame) -> DataFrame:
     """(conv_id, n_turns, _turns) → both combined strings, dropping the
     intermediate sorted array. A plain projection over the aggregate."""

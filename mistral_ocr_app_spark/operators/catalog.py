@@ -28,7 +28,3 @@ def queries():
 
 def oracle_sql():
     return {name: qd.sql for name, qd in CATALOG.items() if qd.sql is not None}
-
-
-def describe() -> dict[str, str]:
-    return {name: qd.doc for name, qd in CATALOG.items()}

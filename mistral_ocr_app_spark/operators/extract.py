@@ -323,21 +323,3 @@ def docx_roundtrip_udf(text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["n_paras", "text"]).astype(
         {"n_paras": "Int32"}
     )
-
-
-@F.pandas_udf(T.StringType())
-def strip_html_udf(html: pd.Series) -> pd.Series:
-    """V2 — north-rule HTML boilerplate stripper as a scalar pandas UDF."""
-    return html.map(lambda h: html_strip.strip_boilerplate(h) if h else "")
-
-
-@F.pandas_udf(T.StringType())
-def rewrite_markdown_udf(text: pd.Series, turn_idx: pd.Series) -> pd.Series:
-    """V1 — markdown link rewrite (first-occurrence-only, app.py:64-115)."""
-    return pd.Series(
-        [
-            md.rewrite_markdown_links(t or "", int(i))[0]
-            for t, i in zip(text, turn_idx)
-        ],
-        index=text.index,
-    )
