@@ -57,8 +57,7 @@ DEFAULT_SALT_THRESHOLD = 64  # grid-salt buckets heavier than this
 
 
 def near_dup_pairs(docs, jaccard_threshold: float = 0.8,
-                   max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-                   salt_threshold: int | None = DEFAULT_SALT_THRESHOLD):
+                   max_bucket_size: int | None = DEFAULT_MAX_BUCKET):
     """LSH candidates (guarded) → Jaccard-verified near-dup pairs.
 
     Production path: xxhash64 base hash (~4× cheaper than the
@@ -67,8 +66,8 @@ def near_dup_pairs(docs, jaccard_threshold: float = 0.8,
     emits O(k²) candidate pairs that the verify step must process even
     though AQE spreads the join itself; buckets over ``max_bucket_size``
     are dropped and returned for the job stats (no silent caps), and
-    merely-heavy buckets (over ``salt_threshold``) are enumerated on the
-    grid-salt lattice — identical pair set, bounded task size.
+    merely-heavy buckets (over ``DEFAULT_SALT_THRESHOLD``) are enumerated
+    on the grid-salt lattice — identical pair set, bounded task size.
 
     Verification: true token-set Jaccard computed on candidates only —
     the d3 expression, linear in |candidates|, no quadratic self-join.
@@ -81,8 +80,9 @@ def near_dup_pairs(docs, jaccard_threshold: float = 0.8,
     )
 
     bands = lsh_bands(minhash_signatures(docs, portable=False))
-    cand, dropped = lsh_candidate_pairs(bands, max_bucket_size,
-                                        salt_threshold=salt_threshold)
+    cand, dropped = lsh_candidate_pairs(
+        bands, max_bucket_size, salt_threshold=DEFAULT_SALT_THRESHOLD
+    )
     toks = docs.select(
         "doc_id", F.array_distinct(F.split(F.lower("text"), " ")).alias("tok")
     )
@@ -192,7 +192,6 @@ def incremental_edges(
     state_dir: str,
     jaccard_threshold: float = 0.8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    salt_threshold: int | None = DEFAULT_SALT_THRESHOLD,
 ):
     """Edges linking the new batch to itself and to committed CANONICAL
     ids — the contracted-graph formulation: every committed endpoint is
@@ -208,7 +207,7 @@ def incremental_edges(
     is pruned to candidate rows' columns).
 
     Skew policy mirrors the full-corpus path: new-new candidates use the
-    grid-salted self-join (``salt_threshold``); the new x committed
+    grid-salted self-join (``DEFAULT_SALT_THRESHOLD``); the new x committed
     equi-join needs no lattice because the combined mega-bucket guard
     already caps per-bucket expansion at k_n * k_c < max_bucket_size^2
     rows streamed by the hinted SMJ with AQE skew-split."""
@@ -262,8 +261,9 @@ def incremental_edges(
         )
     from mistral_ocr_app_spark.operators.corpus import lsh_candidate_pairs
 
-    nn_cand, _ = lsh_candidate_pairs(new_bands, None,
-                                     salt_threshold=salt_threshold)
+    nn_cand, _ = lsh_candidate_pairs(
+        new_bands, None, salt_threshold=DEFAULT_SALT_THRESHOLD
+    )
     nc_cand = (
         new_bands.join(
             state_bands.select(

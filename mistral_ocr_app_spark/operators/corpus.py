@@ -558,87 +558,112 @@ def lsh_bands(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _self_join_pairs(bands: DataFrame) -> DataFrame:
-    """Plain hinted SMJ self-join on (band, bucket) → ordered doc pairs
-    (pre-``distinct``)."""
-    a, b = bands.alias("a"), bands.hint("merge").alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+def _banded_pairs(bands: DataFrame, grid: int, keep=None) -> DataFrame:
+    """Hinted SMJ self-join on (band, bucket) → ordered doc pairs
+    (doc_a < doc_b), one row per colliding band that ``keep`` admits.
 
+    Sort-merge, hinted: under small local stats Catalyst would broadcast
+    the UNBOUNDED bands relation — a plan that cannot exist at 10^12
+    scale — and a groupBy+pair-expansion concentrates each mega-bucket's
+    k²/2 pairs into one task (measured 3× slower). SMJ streams pairs and
+    AQE skew-join splits hot (band, bucket) partitions.
 
-def _grid_salted_pairs(bands: DataFrame, grid: int) -> DataFrame:
-    """Heavy-bucket pair enumeration on a ``grid × grid`` salt lattice.
-
-    A bucket of k members emits k²/2 pairs; AQE's skew-join can split
-    the JOIN's input partitions but every pair of one bucket still
-    carries the same (band, bucket) key, so one reducer ultimately
-    streams O(k²) output rows. The standard fix (e.g. the triangle-
-    enumeration literature and Spark skew-salting folklore) is a 2-D
-    block decomposition: each doc gets a deterministic salt
+    ``grid`` > 1 enumerates on a ``grid × grid`` salt lattice. AQE's
+    skew-join can split the JOIN's input partitions, but every pair of
+    one bucket still carries the same (band, bucket) key, so one reducer
+    ultimately streams O(k²) output rows. The lattice is a 2-D block
+    decomposition (the block-partitioned pair enumeration of distributed
+    subgraph matching): each doc gets a deterministic salt
     i = xxhash64(doc_id) % grid; the LEFT side replicates each row
-    across blocks (i, j) for all j, the RIGHT side across (i, j) for
-    all i, and the join key becomes (band, bucket, i, j). An unordered
-    pair (x, y) meets in exactly ONE block — (salt(x), salt(y)) — so
-    the pair set is IDENTICAL to the plain self-join (equality-tested),
-    while a hot bucket's expansion spreads over grid² independent
-    reducer keys: max task work drops k²→(k/grid)² for grid× row
-    replication per side. Salting is deterministic (no rand()), so
-    resume/retry re-derive the same plan."""
-    s = F.lit(grid)
-    grid_seq = F.sequence(F.lit(0), F.lit(grid - 1))
-    salted = bands.withColumn(
-        "i", F.pmod(F.xxhash64(F.col("doc_id")), s).cast("int")
-    )
-    left = salted.withColumn("j", F.explode(grid_seq))
-    right = (
-        salted.withColumnRenamed("i", "j")
-        .withColumn("i", F.explode(grid_seq))
-    )
+    across blocks (i, j) for all j, the RIGHT side across (i, j) for all
+    i, and the join key becomes (band, bucket, i, j). An unordered pair
+    (x, y) meets in exactly ONE block — (salt(x), salt(y)) — so the pair
+    set is IDENTICAL to grid 1 (equality-tested), while a hot bucket's
+    expansion spreads over grid² reducer keys: max task work drops
+    k²→(k/grid)² for grid× row replication per side. Salting is
+    deterministic (no rand()), so resume/retry re-derive the same plan.
+
+    ``keep(band, sig_a, sig_b)``: an extra join condition over the two
+    sides' ``sig`` columns (the grouped generator's ``_first_collision``);
+    on either grid a pair meets once per colliding band."""
+    keys = ["band", "bucket"]
+    left = right = bands
+    if grid > 1:
+        seq = F.sequence(F.lit(0), F.lit(grid - 1))
+        salted = bands.withColumn(
+            "i", F.pmod(F.xxhash64("doc_id"), F.lit(grid)).cast("int")
+        )
+        left = salted.withColumn("j", F.explode(seq))
+        right = salted.withColumnRenamed("i", "j").withColumn("i", F.explode(seq))
+        keys += ["i", "j"]
     a, b = left.alias("a"), right.hint("merge").alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.i") == F.col("b.i"))
-        & (F.col("a.j") == F.col("b.j"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col("a.doc_id") < F.col("b.doc_id"))
+    if keep is not None:
+        on.append(keep(F.col("a.band"), F.col("a.sig"), F.col("b.sig")))
+    return a.join(b, on).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    )
+
+
+def _split_banded_pairs(
+    bands: DataFrame,
+    salt_threshold: int,
+    salt_grid: int,
+    max_bucket_size: int | None = None,
+    keep=None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Light/heavy split on bucket size → (pairs, dropped).
+
+    Bucket sizes are counted once. Buckets over ``max_bucket_size`` are
+    in neither side and come back as the (band, bucket, k) ``dropped``
+    relation (``None`` without a ceiling); the guard drops whole
+    buckets, so the sizes of the survivors are the same counts. Buckets
+    of at most ``salt_threshold`` members take the plain join, the rest
+    the ``salt_grid`` lattice (``_banded_pairs``). Both key sets are
+    broadcast for the semi/anti joins: they hold at most
+    ``n_docs * LSH_BANDS / min(salt_threshold, max_bucket_size)`` rows,
+    in practice the skew tail (a handful of stopword-ish buckets); if a
+    corpus ever produced a key set too big to broadcast, dropping the
+    ``F.broadcast`` wrap degrades both to shuffle semi/anti joins on the
+    same key with an unchanged pair set."""
+    sizes = bands.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("k"))
+    k = F.col("k")
+    not_light = heavy = k > salt_threshold
+    dropped = None
+    if max_bucket_size is not None:
+        dropped = sizes.filter(k > max_bucket_size)
+        not_light = not_light | (k > max_bucket_size)
+        heavy = heavy & (k <= max_bucket_size)
+
+    def split(cond, how):
+        keys = F.broadcast(sizes.filter(cond).select("band", "bucket"))
+        return bands.join(keys, ["band", "bucket"], how)
+
+    pairs = _banded_pairs(split(not_light, "left_anti"), 1, keep).unionByName(
+        _banded_pairs(split(heavy, "left_semi"), salt_grid, keep)
+    )
+    return pairs, dropped
 
 
 def lsh_candidate_pairs(
     bands: DataFrame,
     max_bucket_size: int | None = None,
-    salt_threshold: int | None = None,
+    salt_threshold: int = 64,
     salt_grid: int = 8,
 ) -> tuple[DataFrame, DataFrame | None]:
     """(band, bucket) self-join → distinct candidate pairs (doc_a < doc_b).
 
-    Sort-merge self-join, hinted: under small local stats Catalyst would
-    broadcast the UNBOUNDED bands relation — a plan that cannot exist at
-    10^12 scale — and a groupBy+pair-expansion concentrates each
-    mega-bucket's k²/2 pairs into one task (measured 3× slower). SMJ
-    streams pairs and AQE skew-join splits hot (band, bucket) partitions.
-
     ``salt_threshold``: buckets with more members than this are
-    enumerated on a ``salt_grid²`` block lattice (``_grid_salted_pairs``)
-    instead of the plain self-join — same pair set, but a hot bucket's
+    enumerated on a ``salt_grid²`` block lattice instead of the plain
+    self-join (``_banded_pairs``) — same pair set, but a hot bucket's
     quadratic expansion spreads across grid² reducer keys instead of
     one. Measured at sf0.1: 32 buckets exceed 64 members and carry
     11.49M of the 11.55M pre-distinct pairs, the top four (stopword-ish,
     2.1-2.7k docs each) alone ~10.7M — unsalted, those four serialize
     into four tasks. End-to-end candidate generation (warm, best-of-3,
     local[32], sf0.1): 1.85 s salted vs 2.49 s unsalted, despite the
-    extra bucket-size pass. The heavy/light split is a
-    broadcast semi/anti join on the heavy-key set — worst-case
-    ``n_docs * LSH_BANDS / salt_threshold`` rows but in practice the
-    skew tail (a handful of stopword-ish buckets); if a corpus ever
-    produced a heavy-key set too big to broadcast, dropping the
-    ``F.broadcast`` wrap degrades both splits to shuffle semi/anti
-    joins on the same key with an unchanged pair set.
+    extra bucket-size pass.
 
     ``max_bucket_size``: ceiling on bucket membership. AQE spreads a hot
     bucket's JOIN across tasks, but a stopword-like bucket with k members
@@ -650,38 +675,17 @@ def lsh_candidate_pairs(
     probability. Returns ``(pairs, dropped)`` where ``dropped`` is the
     (band, bucket, k) relation of dropped buckets — callers MUST surface
     its counts (no silent caps); ``None`` when no ceiling was set.
-    The dropped relation is broadcast for the anti-join: it has at most
-    ``n_docs * LSH_BANDS / max_bucket_size`` rows by construction.
 
-    The two compose as a layered policy: drop the truly pathological
-    buckets (k > max_bucket_size — near-zero selectivity), salt the
-    merely-heavy ones (salt_threshold < k ≤ max_bucket_size — real
-    candidates, bounded task size).
+    The two compose as a layered policy over one bucket-size count
+    (``_split_banded_pairs``): drop the truly pathological buckets
+    (k > max_bucket_size — near-zero selectivity), salt the merely-heavy
+    ones (salt_threshold < k ≤ max_bucket_size — real candidates,
+    bounded task size).
     """
-    dropped = None
-    if max_bucket_size is not None:
-        sizes = bands.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("k"))
-        dropped = sizes.filter(F.col("k") > max_bucket_size)
-        bands = bands.join(
-            F.broadcast(dropped.select("band", "bucket")),
-            ["band", "bucket"],
-            "left_anti",
-        )
-    if salt_threshold is None:
-        pairs = _self_join_pairs(bands).distinct()
-    else:
-        sizes = bands.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("k"))
-        heavy_keys = sizes.filter(F.col("k") > salt_threshold).select(
-            "band", "bucket"
-        )
-        light = bands.join(F.broadcast(heavy_keys), ["band", "bucket"], "left_anti")
-        heavy = bands.join(F.broadcast(heavy_keys), ["band", "bucket"], "left_semi")
-        pairs = (
-            _self_join_pairs(light)
-            .unionByName(_grid_salted_pairs(heavy, salt_grid))
-            .distinct()
-        )
-    return pairs, dropped
+    pairs, dropped = _split_banded_pairs(
+        bands, salt_threshold, salt_grid, max_bucket_size
+    )
+    return pairs.distinct(), dropped
 
 
 # ---- round 7: signature-grouped candidate generation ------------------
@@ -704,74 +708,32 @@ def lsh_candidate_pairs(
 # 2. **First-collision-band filter.** A pair of groups colliding in m
 #    bands would still be generated m times; instead of ``distinct``,
 #    each side carries its full signature and the join keeps a pair
-#    only in the FIRST band where the slices collide (no earlier band's
-#    slice equal). Every colliding pair survives in exactly one band —
-#    and with the expansion emitting each (group, group) combination
-#    exactly once, the result is duplicate-free BY CONSTRUCTION and the
-#    billion-row distinct exchange disappears outright.
+#    only in the FIRST band where the slices collide (``_first_collision``,
+#    the ``keep`` condition of the same ``_split_banded_pairs`` /
+#    ``_banded_pairs`` join that ``lsh_candidate_pairs`` runs). Every
+#    colliding pair survives in exactly one band — and with the
+#    expansion emitting each (group, group) combination exactly once,
+#    the result is duplicate-free BY CONSTRUCTION and the billion-row
+#    distinct exchange disappears outright.
 #
 # Exactness: pair (a, b) is a candidate iff ∃ band with equal bucket
 # keys iff their sig slices are equal in some band — decided entirely
 # by (sig(a), sig(b)), which the group representative preserves.
-# Equality with the plain path is pinned by tests/test_dedup_cluster.py
-# and the unchanged DuckDB oracle.
+# Equality with the plain self-join + ``distinct`` is pinned by
+# tests/test_dedup_cluster.py and the unchanged DuckDB oracle.
 
 
 def _first_collision(band, sig_a, sig_b):
-    """True iff no band EARLIER than ``band`` also collides, evaluated
-    from the two full signatures. band 0 is trivially first."""
+    """True iff ``band`` is the first band whose signature slices are
+    equal: one CASE WHEN over the bands, compared with ``band``."""
 
     def sl(s, t):
         return F.slice(s, t * _ROWS_PER_BAND + 1, _ROWS_PER_BAND)
 
-    cond = F.lit(True)  # band 0: no earlier band exists
+    first = F.when(sl(sig_a, 0) == sl(sig_b, 0), 0)
     for t in range(1, LSH_BANDS):
-        no_earlier = sl(sig_a, 0) != sl(sig_b, 0)
-        for tp in range(1, t):
-            no_earlier = no_earlier & (sl(sig_a, tp) != sl(sig_b, tp))
-        cond = F.when(band == t, no_earlier).otherwise(cond)
-    return cond
-
-
-def _group_self_join_pairs(bands: DataFrame) -> DataFrame:
-    """Hinted SMJ self-join on (band, bucket) over group-representative
-    band rows carrying ``sig`` → (gid_a, gid_b), each colliding group
-    pair emitted from exactly its first colliding band."""
-    a, b = bands.alias("a"), bands.hint("merge").alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & _first_collision(F.col("a.band"), F.col("a.sig"), F.col("b.sig")),
-    ).select(F.col("a.doc_id").alias("gid_a"), F.col("b.doc_id").alias("gid_b"))
-
-
-def _group_grid_salted_pairs(bands: DataFrame, grid: int) -> DataFrame:
-    """Grid-salted variant of ``_group_self_join_pairs`` (same 2-D block
-    lattice as ``_grid_salted_pairs`` — an unordered pair meets in
-    exactly one block, so the first-collision filter still sees each
-    pair once per colliding band and keeps exactly one)."""
-    s = F.lit(grid)
-    grid_seq = F.sequence(F.lit(0), F.lit(grid - 1))
-    salted = bands.withColumn(
-        "i", F.pmod(F.xxhash64(F.col("doc_id")), s).cast("int")
-    )
-    left = salted.withColumn("j", F.explode(grid_seq))
-    right = (
-        salted.withColumnRenamed("i", "j")
-        .withColumn("i", F.explode(grid_seq))
-    )
-    a, b = left.alias("a"), right.hint("merge").alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.i") == F.col("b.i"))
-        & (F.col("a.j") == F.col("b.j"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & _first_collision(F.col("a.band"), F.col("a.sig"), F.col("b.sig")),
-    ).select(F.col("a.doc_id").alias("gid_a"), F.col("b.doc_id").alias("gid_b"))
+        first = first.when(sl(sig_a, t) == sl(sig_b, t), t)
+    return first == band
 
 
 def grouped_candidate_pairs(
@@ -785,8 +747,9 @@ def grouped_candidate_pairs(
     ``distinct`` anywhere in the plan).
 
     Shape: one small shuffle groups docs by signature; the banded
-    self-join runs over group representatives (light/heavy split +
-    grid salting exactly as ``lsh_candidate_pairs``); expansion back to
+    self-join runs over group representatives (the light/heavy split
+    and grid salting of ``lsh_candidate_pairs``, with
+    ``_first_collision`` as the join's ``keep``); expansion back to
     doc pairs walks a chunk lattice over each group's sorted member
     array — chunk combos are repartitioned by their key before the
     explode so a mega-group's quadratic output spreads over the whole
@@ -811,12 +774,8 @@ def grouped_candidate_pairs(
         "sig",
         F.posexplode(_bucket_array()).alias("band", "bucket"),
     )
-    sizes = bands.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("k"))
-    heavy_keys = sizes.filter(F.col("k") > salt_threshold).select("band", "bucket")
-    light = bands.join(F.broadcast(heavy_keys), ["band", "bucket"], "left_anti")
-    heavy = bands.join(F.broadcast(heavy_keys), ["band", "bucket"], "left_semi")
-    gpairs = _group_self_join_pairs(light).unionByName(
-        _group_grid_salted_pairs(heavy, salt_grid)
+    gpairs, _ = _split_banded_pairs(
+        bands, salt_threshold, salt_grid, keep=_first_collision
     )
     # expansion: (group, group) combos → chunk-lattice → doc pairs
     nc = F.ceil(F.col("k") / chunk_size).cast("int")
@@ -836,7 +795,8 @@ def grouped_candidate_pairs(
         F.col("gid").alias("gid_a"), F.col("gid").alias("gid_b")
     )
     combos = (
-        gpairs.unionByName(self_pairs)
+        gpairs.toDF("gid_a", "gid_b")
+        .unionByName(self_pairs)
         .join(
             meta.select(F.col("gid").alias("gid_a"), F.col("nc").alias("nca")),
             "gid_a",

@@ -7,14 +7,22 @@ exception escaping a parser kills the task — the class of bug the DOCX
 ``ValueError: negative seek value`` escape (fixed this round) belonged
 to. Deterministic sweep: ~100 evenly spaced byte positions per fixture,
 several replacement values each, across all seven container formats.
+
+The text parsers behind the extractor go further: ``_extract_one`` runs
+inside the Arrow worker with no try/except at all, so ANY exception is
+a dead task. Their sweep mutates every character of the fixture
+generator's payloads of each kind and asserts nothing raises.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
+from mistral_ocr_app_spark.fixtures import transcripts as tr
 from mistral_ocr_app_spark.functions import avi, docx, jpeg, mp4, pdf, png
 from mistral_ocr_app_spark.operators import multimodal as mm
+from mistral_ocr_app_spark.operators.extract import _extract_one
 
 
 def _cases():
@@ -90,3 +98,36 @@ def test_truncation_raises_only_typed_error():
                     f"{fmt}: truncation at {cut} escaped with "
                     f"{type(e).__name__}: {e}"
                 ) from e
+
+
+# payload kind → (fixture generator, payloads per kind); spans travel in
+# the ``tool`` column, every other kind in ``text``
+_TEXT_PAYLOADS = {
+    "markdown": (tr._markdown_payload, 4),
+    "html": (lambda rng: tr._html_payload(rng)[0], 2),
+    "doc": (tr._doc_payload, 2),
+    "base64": (tr._base64_payload, 12),
+    "spans": (tr._span_payload, 4),
+}
+# structural characters of every payload grammar, a NUL and a non-ASCII
+# letter
+_TEXT_REPLACEMENTS = '\x00"{}[]()<>!=%,:\\Я'
+
+
+@pytest.mark.parametrize("kind", sorted(_TEXT_PAYLOADS))
+def test_extract_one_single_char_mutation_never_raises(kind):
+    make, n = _TEXT_PAYLOADS[kind]
+    rng = np.random.RandomState(11)
+    leaks = []
+    for payload in (make(rng) for _ in range(n)):
+        for pos, ch in enumerate(payload):
+            for rep in _TEXT_REPLACEMENTS:
+                if rep == ch:
+                    continue
+                m = payload[:pos] + rep + payload[pos + 1:]
+                text, tool = (None, m) if kind == "spans" else (m, None)
+                try:
+                    _extract_one(text, tool, pos % 7)
+                except Exception as e:  # noqa: BLE001 — the point of the test
+                    leaks.append((pos, rep, type(e).__name__, str(e)[:80]))
+    assert not leaks, f"{kind}: exceptions escaped: {leaks[:5]}"

@@ -190,6 +190,34 @@ def test_minhash_signatures_equal_column_reference(spark):
         assert got.count() == docs.count()
 
 
+def _reference_pairs(bands):
+    """The plain path: one hinted (band, bucket) self-join, then
+    ``distinct``. The reference every candidate generator must equal."""
+    a, b = bands.alias("a"), bands.hint("merge").alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).distinct()
+
+
+def _reference_guard(bands, max_bucket_size):
+    """(pairs, dropped) of the reference with the mega-bucket ceiling:
+    drop every (band, bucket) over the ceiling, then ``_reference_pairs``."""
+    sizes = bands.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("k"))
+    dropped = sizes.filter(F.col("k") > max_bucket_size)
+    kept = bands.join(dropped, ["band", "bucket"], "left_anti")
+    return _reference_pairs(kept), dropped
+
+
+def _assert_same_rows(got, ref):
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
+
+
 def test_lsh_mega_bucket_guard_bounds_candidates(spark):
     from mistral_ocr_app_spark.operators.corpus import (
         lsh_bands,
@@ -214,9 +242,8 @@ def test_lsh_mega_bucket_guard_bounds_candidates(spark):
 
 
 def test_lsh_guard_is_noop_on_normal_corpus(spark):
-    """Ceiling above every real bucket: identical candidate output and an
-    empty dropped relation (set equality via distinct subtract — the
-    pairs are already distinct)."""
+    """Ceiling above every real bucket: candidate output identical to
+    the reference and an empty dropped relation."""
     from mistral_ocr_app_spark.operators.corpus import (
         lsh_bands,
         lsh_candidate_pairs,
@@ -225,11 +252,9 @@ def test_lsh_guard_is_noop_on_normal_corpus(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     bands = lsh_bands(minhash_signatures(docs, portable=False))
-    uncapped, _ = lsh_candidate_pairs(bands)
     capped, dropped = lsh_candidate_pairs(bands, max_bucket_size=10**6)
     assert dropped.count() == 0
-    assert uncapped.subtract(capped).count() == 0
-    assert capped.subtract(uncapped).count() == 0
+    _assert_same_rows(capped, _reference_pairs(bands))
 
 
 def test_grid_salting_preserves_pair_set_adversarial(spark):
@@ -247,10 +272,8 @@ def test_grid_salting_preserves_pair_set_adversarial(spark):
     docs = _adversarial_docs(spark, n_clones=80, n_unique=30)
     bands = lsh_bands(minhash_signatures(docs, portable=False))
 
-    plain, _ = lsh_candidate_pairs(bands)
     salted, _ = lsh_candidate_pairs(bands, salt_threshold=16, salt_grid=4)
-    assert plain.subtract(salted).count() == 0
-    assert salted.subtract(plain).count() == 0
+    _assert_same_rows(salted, _reference_pairs(bands))
     # the heavy path genuinely ran: the clone bucket alone yields
     # 80*79/2 pairs, all of which must survive the lattice enumeration
     assert salted.count() >= 80 * 79 // 2
@@ -258,7 +281,9 @@ def test_grid_salting_preserves_pair_set_adversarial(spark):
 
 def test_grid_salting_preserves_pair_set_real_corpus(spark):
     """Same equality on the driver testdata with the production defaults
-    (threshold 64, grid 8), plus grid=1 degenerating to the plain join."""
+    (threshold 64, grid 8), plus grid=1 degenerating to the plain join,
+    and with a ceiling low enough to drop real buckets: pairs and the
+    dropped (band, bucket, k) relation both equal the reference."""
     from mistral_ocr_app_spark.operators.corpus import (
         lsh_bands,
         lsh_candidate_pairs,
@@ -267,19 +292,25 @@ def test_grid_salting_preserves_pair_set_real_corpus(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     bands = lsh_bands(minhash_signatures(docs, portable=False))
-    plain, _ = lsh_candidate_pairs(bands)
+    reference = _reference_pairs(bands)
     salted, _ = lsh_candidate_pairs(bands, salt_threshold=64, salt_grid=8)
     degenerate, _ = lsh_candidate_pairs(bands, salt_threshold=64, salt_grid=1)
     for variant in (salted, degenerate):
-        assert plain.subtract(variant).count() == 0
-        assert variant.subtract(plain).count() == 0
+        _assert_same_rows(variant, reference)
+    ref_pairs, ref_dropped = _reference_guard(bands, 20)
+    guarded, dropped = lsh_candidate_pairs(bands, max_bucket_size=20)
+    assert ref_dropped.count() > 0
+    _assert_same_rows(guarded, ref_pairs)
+    _assert_same_rows(dropped, ref_dropped)
 
 
 def test_grid_salting_composes_with_bucket_ceiling(spark):
     """Layered policy: drop k > max_bucket_size, salt
     salt_threshold < k <= max_bucket_size. With a ceiling under the clone
-    bucket, the salted and plain guarded outputs must still agree (the
-    mega-bucket is dropped BEFORE the salt split sees it)."""
+    bucket, the guarded output must equal the guarded reference for a
+    salt threshold below the ceiling (the heavy side is non-empty) and
+    above the clone bucket (only the ceiling keeps it out of the light
+    side), dropped relation included."""
     from mistral_ocr_app_spark.operators.corpus import (
         lsh_bands,
         lsh_candidate_pairs,
@@ -288,13 +319,35 @@ def test_grid_salting_composes_with_bucket_ceiling(spark):
 
     docs = _adversarial_docs(spark, n_clones=80, n_unique=30)
     bands = lsh_bands(minhash_signatures(docs, portable=False))
-    plain, dropped_a = lsh_candidate_pairs(bands, max_bucket_size=50)
-    salted, dropped_b = lsh_candidate_pairs(
-        bands, max_bucket_size=50, salt_threshold=4, salt_grid=4
+    ref_pairs, ref_dropped = _reference_guard(bands, 50)
+    assert ref_dropped.count() > 0
+    for threshold in (4, 100):
+        salted, dropped = lsh_candidate_pairs(
+            bands, max_bucket_size=50, salt_threshold=threshold, salt_grid=4
+        )
+        _assert_same_rows(salted, ref_pairs)
+        _assert_same_rows(dropped, ref_dropped)
+
+
+def test_guarded_lsh_plan_counts_bucket_sizes_once(spark):
+    """The ceiling and the light/heavy split read one (band, bucket)
+    size count: the guard adds no count aggregate to the pair plan."""
+    from mistral_ocr_app_spark.operators.corpus import (
+        lsh_bands,
+        lsh_candidate_pairs,
+        minhash_signatures,
     )
-    assert plain.subtract(salted).count() == 0
-    assert salted.subtract(plain).count() == 0
-    assert dropped_a.count() == dropped_b.count() > 0
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    bands = lsh_bands(minhash_signatures(docs, portable=False))
+
+    def n_counts(max_bucket_size):
+        pairs, _ = lsh_candidate_pairs(bands, max_bucket_size, salt_threshold=64)
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        return plan.count("partial_count(1)")
+
+    assert n_counts(None) > 0
+    assert n_counts(1000) == n_counts(None)
 
 
 def test_grouped_candidate_pairs_equals_plain_path(spark):
@@ -309,7 +362,6 @@ def test_grouped_candidate_pairs_equals_plain_path(spark):
     from mistral_ocr_app_spark.operators.corpus import (
         grouped_candidate_pairs,
         lsh_bands,
-        lsh_candidate_pairs,
         minhash_signatures,
     )
 
@@ -323,9 +375,7 @@ def test_grouped_candidate_pairs_equals_plain_path(spark):
         ),
     ]
     for sigs, chunk in cases:
-        plain, _ = lsh_candidate_pairs(
-            lsh_bands(sigs), salt_threshold=64, salt_grid=8
-        )
+        plain = _reference_pairs(lsh_bands(sigs))
         grouped = grouped_candidate_pairs(
             sigs, salt_threshold=64, salt_grid=8, chunk_size=chunk
         )
